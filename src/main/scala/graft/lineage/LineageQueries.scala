@@ -1424,8 +1424,8 @@ object LineageQueries {
     val outs = (1 to 2).map(i => java.nio.file.Files
       .createTempDirectory(s"graft_ol_out$i").toString)
     val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val collector = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val collector = LineageService.createHttpServer(
+      new java.net.InetSocketAddress("127.0.0.1", 0))
     collector.createContext("/api/v1/lineage",
       (ex: com.sun.net.httpserver.HttpExchange) => {
         events.add(new String(ex.getRequestBody.readAllBytes(),

@@ -2,6 +2,8 @@ package graft.lineage
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
@@ -43,10 +45,18 @@ import org.apache.spark.sql.SparkSession
   * drops fully-superseded runs, and `POST /openlineage` exports the
   * open wire format (idempotent name-UUID runId).
   *
-  * Concurrency: requests serialize through one executor thread.
-  * Lineage parses touch only the analyzer (no Spark jobs), so a
-  * request is milliseconds; the serialization also keeps the
-  * `USE db` threading per-request rather than cross-request.
+  * Concurrency: requests run on a fixed pool of one thread per core,
+  * the size [[LineageParser.parseBulk]] uses — a parse is analyzer
+  * work on the driver, and Spark analyzes concurrent queries on one
+  * session. `USE db` threading is a local of [[LineageParser.parse]],
+  * so it stays per-request whatever the pool size. The one
+  * cross-request invariant, a run id's check-then-append on
+  * `POST /runs/<id>`, holds a per-server lock. Pool threads are
+  * daemons named `graft-lineage-http-N` that retire after 30 s idle,
+  * so a stopped server never holds its JVM open and its threads end
+  * on their own; `server.getExecutor` is the pool (an
+  * `ExecutorService`) for callers that want them gone at once. Accepted sockets are `TCP_NODELAY` (see [[createHttpServer]]):
+  * without it every response waits out the client's delayed ACK.
   *
   * `start(port = 0)` binds an ephemeral port (tests);
   * `server.getAddress.getPort` reports the bound port. Callers own the
@@ -79,7 +89,7 @@ object LineageService {
                ex: HttpExchange,
                render: (String, Seq[LineageResult]) => String): Unit =
       LineageService.handleAuth(spark, metadata, ex, render, tok)
-    val server = HttpServer.create(new InetSocketAddress(host, port), 0)
+    val server = createHttpServer(new InetSocketAddress(host, port))
     // STORE-BACKED tier (r17): with a LineageStore directory the
     // service is a durable lineage BACKEND, not just a parser —
     // POST /runs/<id> parses the body and appends it as that run;
@@ -87,6 +97,7 @@ object LineageService {
     // the store's accumulated graph (see LineageStore for the scale
     // shapes: per-run partition pruning, broadcast snapshot resolve).
     store.foreach { dir =>
+      val appendLock = new Object
       server.createContext("/runs", (ex: HttpExchange) => guarded(ex) {
         val path = ex.getRequestURI.getPath
         (ex.getRequestMethod, path.stripPrefix("/runs")) match {
@@ -131,10 +142,21 @@ object LineageService {
                 s"""{"error":"run $runId already exists"}""")
             else try {
               val results = LineageParser.parse(spark, sql, metadata)
-              LineageStore.append(spark, dir, runId,
-                LineageParser.toDataset(spark, results))
-              respond(ex, 200, s"""{"run":$runId,"edges":${
+              val edges = LineageParser.toDataset(spark, results)
+              // re-checked under the lock: two same-id POSTs on pool
+              // threads can both pass the check above, and append's own
+              // require runs before its write, so it cannot stop the
+              // second one double-appending into `run_id=<n>/`
+              val appended = appendLock.synchronized {
+                !LineageStore.runTaken(spark, dir, runId) && {
+                  LineageStore.append(spark, dir, runId, edges)
+                  true
+                }
+              }
+              if (appended) respond(ex, 200, s"""{"run":$runId,"edges":${
                 results.map(_.colLines.size).sum}}""")
+              else respond(ex, 409,
+                s"""{"error":"run $runId already exists"}""")
             } catch { case e: Exception =>
               respond(ex, 400, s"""{"error":${jstr(
                 Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
@@ -411,9 +433,41 @@ object LineageService {
             schemaOf = t => meta.tableColumns(t))
             .mkString("[", ",", "]"))
       })
-    server.setExecutor(java.util.concurrent.Executors.newSingleThreadExecutor())
+    server.setExecutor(requestPool())
     server.start()
     server
+  }
+
+  /** The one way graft makes a JDK `HttpServer`: turn on `TCP_NODELAY`
+    * for its accepted sockets, then create it. `com.sun.net.httpserver`
+    * writes a response's headers and body as two segments, and without
+    * `TCP_NODELAY` the body waits for the client's delayed ACK (about
+    * 40 ms on Linux) on every response. The JDK offers no per-server
+    * switch: the system property `sun.net.httpserver.nodelay` is read
+    * once, when the JVM creates its first `HttpServer`. So this sets
+    * it only when nobody has (an explicit `-D` value wins), and an
+    * embedding JVM that created a JDK `HttpServer` before this ran
+    * must pass `-Dsun.net.httpserver.nodelay=true` itself. */
+  private[lineage] def createHttpServer(addr: InetSocketAddress): HttpServer = {
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(addr, 0)
+  }
+
+  private val requestThreadIds = new AtomicInteger
+
+  /** One daemon thread per core, created on demand and retired after
+    * 30 s idle. */
+  private def requestPool(): ThreadPoolExecutor = {
+    val n = Runtime.getRuntime.availableProcessors()
+    val pool = new ThreadPoolExecutor(n, n, 30, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r,
+          s"graft-lineage-http-${requestThreadIds.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
   }
 
   /** Constant-time-ish bearer check: with a token configured, the
